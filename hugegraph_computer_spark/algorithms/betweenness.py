@@ -131,7 +131,7 @@ def betweenness_brandes(g, max_rounds: int = 32) -> DataFrame:
     the shared SQL oracle). This is the formulation to run at 10^12-turn
     scale (for the sampled-source estimator, which BFS-restricts the
     frontier too, see betweenness_brandes_sampled)."""
-    from hugegraph_computer_spark.engine.pin import cut_counted
+    from hugegraph_computer_spark.engine.pin import cut
 
     e = g.edges.select(
         F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
@@ -143,7 +143,7 @@ def betweenness_brandes(g, max_rounds: int = 32) -> DataFrame:
     # isEmpty job per frame per round. Values unchanged: only the
     # materialization timing moves.
     # hop-level BFS with path counts; `reach` accumulates finalized rows
-    frontier, n = cut_counted(
+    frontier, (n,) = cut(
         e.where(F.col("e_src") != F.col("e_dst")).select(
             F.col("e_src").alias("s"),
             F.col("e_dst").alias("v"),
@@ -164,7 +164,7 @@ def betweenness_brandes(g, max_rounds: int = 32) -> DataFrame:
         seen = reach.select("s", F.col("v").alias("v2")).withColumn(
             "_seen", F.lit(True)
         )
-        frontier, n = cut_counted(
+        frontier, (n,) = cut(
             nxt.join(seen, ["s", "v2"], "left")
             .where(F.col("_seen").isNull())
             .select(
@@ -228,7 +228,7 @@ def betweenness_brandes_sampled(
     pairs — so sample_rate=1.0 reproduces betweenness_brandes values
     EXACTLY (pytest-asserted), and any rate matches the SQL oracle's
     source-filtered triple join."""
-    from hugegraph_computer_spark.engine.pin import cut_counted
+    from hugegraph_computer_spark.engine.pin import cut
 
     e = g.edges.select(
         F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
@@ -236,7 +236,7 @@ def betweenness_brandes_sampled(
 
     # round-6 round plumbing: lazy cuts + count-as-emptiness-check, as
     # in betweenness_brandes above (values unchanged)
-    frontier, n = cut_counted(
+    frontier, (n,) = cut(
         e.where(F.col("e_src") != F.col("e_dst"))
         .where(source_sample_predicate(F.col("e_src"), sample_rate))
         .select(
@@ -254,7 +254,7 @@ def betweenness_brandes_sampled(
             .groupBy("s", F.col("e_dst").alias("v2"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        nxt, n = cut_counted(
+        nxt, (n,) = cut(
             nxt.join(
                 seen.withColumnRenamed("v", "v2").withColumn("_seen", F.lit(True)),
                 ["s", "v2"],

@@ -41,10 +41,9 @@ formulation loses at 100-TB scale: on the sf0.1 graph this converges in
 are scheduler-floor-bound, so the walls are comparable; the win is the
 shuffle-round count, which dominates once each scatter is minutes of
 cluster work.
-Lineage is cut per round through the AQE-safe persist->checkpoint pin
-(see `louvain._pin`) because the round plan (two joins + agg) is the
-complex-plan shape where static post-checkpoint planning was measured
-~60x slower.
+The symmetrized edge view is pinned once (`engine.pin.pin`); each
+round's (id, comp, changed) state is a lazy lineage cut whose one
+materializing action also returns the changed-count (`engine.pin.cut`).
 """
 
 from __future__ import annotations
@@ -54,8 +53,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.algorithms.louvain import _pin
-from hugegraph_computer_spark.engine.pin import static_plan_scope
+from hugegraph_computer_spark.engine.pin import cut, pin, static_plan_scope
 from hugegraph_computer_spark.engine.superstep import PregelRunner
 
 
@@ -63,22 +61,6 @@ from hugegraph_computer_spark.engine.superstep import PregelRunner
 class CCResult:
     labels: DataFrame  # (id, comp) — comp = min id of the component
     rounds: int
-
-
-def _pin_changed(df: DataFrame) -> tuple[DataFrame, int]:
-    """Materialize a round's (id, comp, changed) lineage-free and
-    collect the changed-count — ONE Spark action total.
-
-    Round-6 shape: a lazy localCheckpoint under AQE converts the round
-    plan adaptively (join strategies still runtime-chosen; the
-    conversion itself executes the shuffle stages), and the agg action
-    then materializes the checkpointed RDD while computing the count.
-    This replaces the earlier persist -> agg -> eager-checkpoint ->
-    unpersist dance, which stored every round twice (columnar cache +
-    checkpoint blocks) and paid an extra full-pass job per round."""
-    df = df.localCheckpoint(eager=False)
-    changed = df.agg(F.sum(F.col("changed").cast("long"))).collect()[0][0]
-    return df, int(changed or 0)
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -152,7 +134,7 @@ def connected_components(graph, max_rounds: int = 50) -> CCResult:
     # pin the symmetrized view once: every round's relax join then scans
     # a lineage-free RDD instead of re-planning the union-of-projections
     # (and, when graph.edges itself is unpinned, its whole derivation)
-    sym = _pin(symmetrize(graph.edges))
+    sym = pin(symmetrize(graph.edges))
 
     state = graph.vertices.select("id", F.col("id").alias("comp"))
     rounds = 0
@@ -166,8 +148,10 @@ def connected_components(graph, max_rounds: int = 50) -> CCResult:
     with static_plan_scope(spark, static_p):
         while rounds < max_rounds:
             rounds += 1
-            state, changed = _pin_changed(cc_round(sym, state))
-            if changed == 0:
+            state, row = cut(
+                cc_round(sym, state), F.sum(F.col("changed").cast("long"))
+            )
+            if not row[0]:  # NULL on an empty graph
                 break
 
     return CCResult(labels=state.select("id", "comp"), rounds=rounds)

@@ -62,12 +62,12 @@ def closeness_centrality(
         frontier = frontier.where(
             source_sample_predicate(F.col("start"), sample_rate)
         )
-    from hugegraph_computer_spark.engine.pin import cut_counted
+    from hugegraph_computer_spark.engine.pin import cut
 
     # round-6 round plumbing: lazy lineage cuts whose materializing
     # count doubles as the emptiness check — replaces one eager
     # checkpoint pass + one isEmpty job per frame per round
-    frontier, n_frontier = cut_counted(
+    frontier, (n_frontier,) = cut(
         frontier.groupBy("id", "start").agg(F.min("dist").alias("dist"))
     )
 
@@ -90,7 +90,7 @@ def closeness_centrality(
         cand = fwd.groupBy("id", "start").agg(F.min("dist").alias("dist"))
         # keep only true improvements vs accumulated state
         old = dists.select("id", "start", F.col("dist").alias("old"))
-        improved, n_frontier = cut_counted(
+        improved, (n_frontier,) = cut(
             cand.join(old, ["id", "start"], "left")
             .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
             .select("id", "start", "dist")

@@ -25,9 +25,9 @@ as PageRank, so every scaling measurement in BENCH/BASELINE.md carries
 over. Both L2 norms are driver-collected in a SINGLE union-agg action
 per round (normalization factors cancel through the linear gathers —
 see the loop comment) and folded back as literals, so the round plan
-stays constant-size; lineage is cut once per round through the
-AQE-safe persist->checkpoint pin (louvain._pin). No Python UDFs, no
-driver-side row loops.
+stays constant-size; lineage is cut per round by lazy localCheckpoints
+that materialize under the round's norms collect (see `hits`). No
+Python UDFs, no driver-side row loops.
 """
 
 from __future__ import annotations
@@ -38,8 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.algorithms.louvain import _pin
-from hugegraph_computer_spark.engine.pin import static_plan_scope
+from hugegraph_computer_spark.engine.pin import pin, static_plan_scope
 from hugegraph_computer_spark.engine.superstep import PregelRunner
 
 
@@ -63,7 +62,7 @@ def hits(graph, supersteps: int = 10) -> HitsResult:
     jobs and a double store per round (bench_extra: hits10 at sf0.01
     went from 22.0 s to the re-measured figure in OPTIMIZATION_r06.md).
     """
-    de = _pin(graph.edges.select("src", "dst").dropDuplicates(["src", "dst"]))
+    de = pin(graph.edges.select("src", "dst").dropDuplicates(["src", "dst"]))
     vertices = graph.vertices.select("id")
     state = vertices.select(
         "id", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")

@@ -46,9 +46,6 @@ class KCore(VertexProgram):
             )
         }
 
-    def master_continue(self, s: int, aggs: dict) -> bool:
-        return aggs["expected_msgs"] != 0
-
     def _scatter(self, edges):
         e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
 

@@ -61,9 +61,6 @@ class Lpa(VertexProgram):
             )
         }
 
-    def master_continue(self, s: int, aggs: dict) -> bool:
-        return aggs["expected_msgs"] != 0
-
     @staticmethod
     def _scatter(edges):
         e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))

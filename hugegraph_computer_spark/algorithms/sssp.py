@@ -47,9 +47,6 @@ class Sssp(VertexProgram):
             )
         }
 
-    def master_continue(self, s: int, aggs: dict) -> bool:
-        return aggs["expected_msgs"] != 0
-
     def _scatter(self, edges):
         e = edges.select(
             F.col("src").alias("e_src"),

@@ -26,10 +26,11 @@ recomputed INSIDE the shrinking subgraph, so the degree agg + wedge
 join re-run per peel round. Per round: one V-sized degree agg, one
 self-join shuffle, one membership semi-join + one support aggregation,
 all JVM-side; the round result is lineage-cut lazily and the
-materializing count doubles as the convergence check (engine/pin
-cut_counted — one action, one store per round). Removal cascades terminate in a handful of rounds in
-practice (peeling only re-examines survivors); `max_rounds` bounds the
-loop defensively and WARNS when exhausted before the fixpoint.
+materializing count doubles as the convergence check (engine.pin.cut —
+one action, one store per round). Removal cascades terminate in a
+handful of rounds in practice (peeling only re-examines survivors);
+`max_rounds` bounds the loop defensively and WARNS when exhausted
+before the fixpoint.
 
 Scale note: with (degree, id) orientation the wedge fan-out through
 any pivot is bounded by its lowest-degree endpoint's out-degree —
@@ -45,7 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.engine.pin import cut_counted
+from hugegraph_computer_spark.engine.pin import cut
 
 
 @dataclass
@@ -109,7 +110,7 @@ def ktruss(graph, k: int = 4, max_rounds: int = 30) -> TrussResult:
     support measured inside the final subgraph, plus the round count."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    edges, n_edges = cut_counted(
+    edges, (n_edges,) = cut(
         graph.undirected_single()
         .edges.where(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
@@ -120,8 +121,8 @@ def ktruss(graph, k: int = 4, max_rounds: int = 30) -> TrussResult:
         rounds += 1
         # edges with zero triangles fall out of the aggregation and are
         # thereby dropped — correct for every k >= 3 (0 < k-2); the
-        # pin's materializing count doubles as the convergence check
-        survivors, n_new = cut_counted(
+        # cut's materializing count doubles as the convergence check
+        survivors, (n_new,) = cut(
             _wedge_support(edges).where(F.col("support") >= k - 2)
         )
         if n_new == n_edges:  # survivors ⊆ edges, so equal count = fixpoint

@@ -94,10 +94,6 @@ class Wcc(VertexProgram):
             "expected_msgs": F.sum(changed * F.col("outdeg")),
         }
 
-    def master_continue(self, s: int, aggs: dict) -> bool:
-        # vote-to-halt on the aggregate: no senders -> no messages
-        return aggs["expected_msgs"] != 0
-
     def superstep(self, s, g, state, messages, aggs) -> StepOutput:
         # expected_msgs == the prior message count (exact for s >= 1),
         # so the frontier-broadcast decision matches the counted era

@@ -1,13 +1,22 @@
-"""AQE-safe materialize-and-truncate ("pin") for iterative plans.
+"""The two lineage cuts every iterative loop uses, plus the step
+planner's conf scope.
 
-localCheckpoint alone converts the UNCACHED plan to an RDD outside
-adaptive execution (statically planned join strategies — measured ~60x
-slower for complex round shapes, see louvain), while persist alone
-keeps the full logical plan growing round-over-round (explain strings
-go exponential -> driver OOM). So: force the computation through an
-AQE SQL action into cache, THEN checkpoint the (now trivial) cache
-scan and release the cache entry. The result is a lineage-free
-LogicalRDD leaf that keeps its physical partitioning.
+- `cut`: lazy `localCheckpoint` + ONE materializing action that also
+  returns the round's driver scalars. The checkpoint converts the plan
+  under the session's current planning mode (AQE, or the static scope
+  below) and the action stores the checkpoint blocks directly; later
+  references read the stored RDD. One pass, one store. This is the
+  per-superstep/per-round cut (the reference's vertex-state double
+  buffer, FileGraphPartition.java:640-661).
+- `pin`: the eager, partition-preserving cut for base views. localCheckpoint
+  alone converts the UNCACHED plan to an RDD outside adaptive execution
+  (statically planned join strategies — measured ~60x slower for complex
+  round shapes, see louvain), while persist alone keeps the full logical
+  plan growing round-over-round (explain strings go exponential -> driver
+  OOM). So: force the computation through an AQE SQL action into cache,
+  THEN checkpoint the (now trivial) cache scan statically and release the
+  cache entry. The result is a lineage-free LogicalRDD leaf that keeps its
+  physical partitioning.
 
 Round-6 measurement note (BENCH/BASELINE.md round-4 floor profile +
 this round's re-profile): the per-superstep lazy-localCheckpoint
@@ -23,31 +32,8 @@ from __future__ import annotations
 import threading
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
-
-
-@contextmanager
-def static_conversion(spark):
-    """Temporarily disable AQE around a localCheckpoint call.
-
-    Two measured effects (round 6, see OPTIMIZATION_r06.md):
-    - an AQE-planned checkpoint reports UnknownPartitioning on its
-      LogicalRDD, so every downstream key-equal join/aggregation pays a
-      fresh Exchange; a statically-planned checkpoint KEEPS the plan's
-      hashpartitioning, making steady-state superstep joins
-      co-partitioned and exchange-free;
-    - AQE's plan->RDD conversion eagerly executes every query stage of
-      the plan (each submitted as its own Spark job: broadcast builds,
-      shuffle maps), so a lazy checkpoint under AQE pays several
-      scheduling round-trips before the action even starts.
-    """
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
+from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import functions as F
 
 # SQL confs are per-SESSION, not per-thread, and ComputerDriver runs
 # jobs concurrently on one session (engine/driver.py) — so only ONE
@@ -80,9 +66,9 @@ def static_plan_scope(spark, partitions: int | None):
     try:
         prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
         prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
         try:
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
             yield
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -91,39 +77,33 @@ def static_plan_scope(spark, partitions: int | None):
         _STATIC_SCOPE_LOCK.release()
 
 
+def cut(df: DataFrame, *agg_exprs: Column) -> tuple[DataFrame, Row]:
+    """Lazy lineage cut + ONE action that materializes it and returns
+    `agg_exprs` evaluated over the cut frame (default: the row count,
+    as `row[0]`)."""
+    df = df.localCheckpoint(eager=False)
+    return df, df.agg(*(agg_exprs or (F.count(F.lit(1)),))).collect()[0]
+
+
 def pin(df: DataFrame) -> DataFrame:
     """Materialize + truncate lineage, AQE-safely (see module doc).
 
     The cache fill (count) runs UNDER AQE — complex round plans keep
     adaptive join planning — but the checkpoint of the now-trivial
     cache scan is statically planned so the LogicalRDD keeps its hash
-    partitioning (`static_conversion`)."""
+    partitioning. Two measured effects of the static checkpoint (round
+    6, OPTIMIZATION_r06.md): an AQE-planned checkpoint reports
+    UnknownPartitioning, so every downstream key-equal join pays a
+    fresh Exchange; and AQE's plan->RDD conversion runs every query
+    stage as its own Spark job."""
+    spark = df.sparkSession
     df = df.persist()
     df.count()
-    with static_conversion(df.sparkSession):
+    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
         out = df.localCheckpoint(eager=True)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
     df.unpersist()
     return out
-
-
-def pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """`pin`, also returning the row count the pin already paid for."""
-    df = df.persist()
-    n = df.count()
-    with static_conversion(df.sparkSession):
-        out = df.localCheckpoint(eager=True)
-    df.unpersist()
-    return out, n
-
-
-def cut_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """Lazy lineage cut + materializing count — ONE pass, one store.
-
-    The lazy localCheckpoint converts under AQE (adaptive execution of
-    the plan's stages) and the count materializes the checkpoint blocks
-    directly; later references read the stored RDD. Prefer this over
-    `pin_counted` unless the preserved hash partitioning of the
-    cache-scan pin is specifically needed — the pin stores the data
-    twice (columnar cache + checkpoint blocks) for the same effect."""
-    df = df.localCheckpoint(eager=False)
-    return df, df.count()

@@ -43,10 +43,13 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.engine.pin import static_plan_scope
+from hugegraph_computer_spark.engine.pin import cut, static_plan_scope
 
 MSG_COUNT = "_message_count"
 SUPERSTEP = "_superstep"
+# edges per task below which a superstep runs statically planned (see
+# PregelRunner._static_step_partitions)
+EDGES_PER_STATIC_TASK = 32768
 
 
 class RunAborted(RuntimeError):
@@ -99,8 +102,12 @@ class VertexProgram:
         raise NotImplementedError
 
     def master_continue(self, s: int, aggs: dict[str, Any]) -> bool:
-        """MasterComputation.compute() — return False to stop."""
-        return True
+        """MasterComputation.compute() — return False to stop.
+
+        Default: vote-to-halt on the `expected_msgs` aggregate (the
+        exact in-flight message count of programs that halt without a
+        count job). An empty state sums to NULL, which halts too."""
+        return bool(aggs.get("expected_msgs", 1))
 
     def finalize(self, state: DataFrame) -> DataFrame:
         """Project the user-facing result from the internal state."""
@@ -117,46 +124,9 @@ class RunResult:
 
 
 class PregelRunner:
-    def __init__(
-        self,
-        checkpoint_dir: str | None = None,
-        checkpoint_every: int = 5,
-        state_mode: str | None = None,
-        truncate_every: int | None = None,
-    ):
+    def __init__(self, checkpoint_dir: str | None = None, checkpoint_every: int = 5):
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
-        # per-superstep state materialization: "lazy" (single-job static
-        # plan, default — measured faster), "aqe" (adaptive-planned
-        # through cache + eager checkpoint), or "cache" (persist-only:
-        # no lineage cut at all — Catalyst's cache manager substitutes
-        # the InMemoryRelation for the state subtree when planning later
-        # supersteps, so the PHYSICAL plan stays shallow while the
-        # analyzed plan nests one level per step); see run()
-        self.state_mode = state_mode or os.environ.get(
-            "SPARK_GRAFT_STATE_MODE", "lazy"
-        )
-        if self.state_mode not in ("lazy", "aqe", "cache"):
-            raise ValueError(
-                "state_mode must be 'lazy', 'aqe' or 'cache', "
-                f"got {self.state_mode!r}"
-            )
-        # lazy mode only: cut lineage every K supersteps instead of every
-        # superstep — attacks the measured 0.51 s/step plan->RDD
-        # conversion floor (BENCH/BASELINE.md round-4 profile) at the
-        # price of a 2^(K-1)-wide uncut plan window whose shuffles
-        # re-execute on every in-window action. A floor knob for
-        # tiny-per-step data; K=1 (always cut) is the default and the
-        # right choice whenever per-step execution dominates.
-        self.truncate_every = int(
-            truncate_every
-            if truncate_every is not None
-            else os.environ.get("SPARK_GRAFT_TRUNCATE_EVERY", "1")
-        )
-        if self.truncate_every < 1:
-            raise ValueError(
-                f"truncate_every must be >= 1, got {self.truncate_every}"
-            )
 
     # -- step planner ----------------------------------------------------
     @staticmethod
@@ -173,39 +143,25 @@ class PregelRunner:
         stages x partitions tiny-task launches (measured 1.59 s/step vs
         0.88 at p=32, sf0.1). The resolution is to derive the partition
         count from the data (guide: partitioning scale-adaptive, never a
-        constant): p = ceil(E / rows_per_task). When p < the graph's
-        partition count the per-task work is below task-launch
+        constant): p = ceil(E / EDGES_PER_STATIC_TASK). When p < the
+        graph's partition count the per-task work is below task-launch
         amortization, so the step runs statically at p (measured
         0.55 s/step at p=4 vs 1.31 AQE in the same window, sf0.1,
         local[32] — same superstep counts); when p >= partitions the
         data is large enough to amortize the AQE floor and adaptive
         planning keeps its runtime-broadcast/coalescing/skew advantages,
-        so the runner keeps today's AQE conversion unchanged.
+        so the runner keeps the AQE conversion unchanged.
 
         Uses the edge count only when the graph ALREADY knows it
         (captured from a materializing count that ran anyway) — unknown
         counts never trigger an extra job, they just keep AQE mode.
         """
-        planner = os.environ.get("SPARK_GRAFT_STEP_PLANNER", "auto")
-        if planner == "aqe":
-            return None
         ne = getattr(g, "_ne", None)
-        parts = getattr(g, "partitions", None) or spark.sparkContext.defaultParallelism
-        rows_per_task = int(
-            os.environ.get("SPARK_GRAFT_STATIC_ROWS_PER_TASK", "32768")
-        )
         if ne is None:
-            # forced static without a known count: use the partition count
-            return parts if planner == "static" else None
-        p = max(1, math.ceil(ne / rows_per_task))
-        if planner == "static":
-            return min(p, parts)
+            return None
+        parts = getattr(g, "partitions", None) or spark.sparkContext.defaultParallelism
+        p = max(1, math.ceil(ne / EDGES_PER_STATIC_TASK))
         return p if p < parts else None
-
-    # -- materialization -------------------------------------------------
-    def _materialize(self, df: DataFrame) -> DataFrame:
-        """Eager lineage cut — used on the resume path only."""
-        return df.localCheckpoint(eager=True)
 
     @staticmethod
     def _partition_lineage(df: DataFrame) -> list[dict[str, int]]:
@@ -271,19 +227,16 @@ class PregelRunner:
         spark = g.vertices.sparkSession
         history: list[dict[str, Any]] = []
         t_run0 = time.monotonic()
-        prev_state = prev_msgs = None
         program.prepare(g)
 
         if resume_from:
             with open(os.path.join(resume_from, "meta.json")) as f:
                 meta = json.load(f)
             s = int(meta["superstep"])
-            state = self._materialize(
-                spark.read.parquet(os.path.join(resume_from, "state"))
-            )
+            state, _ = cut(spark.read.parquet(os.path.join(resume_from, "state")))
             messages = None
             if meta["has_messages"]:
-                messages = self._materialize(
+                messages, _ = cut(
                     spark.read.parquet(os.path.join(resume_from, "messages"))
                 )
             aggs = dict(meta["aggregates"])
@@ -295,31 +248,13 @@ class PregelRunner:
             aggs = {}
             finished = False
 
-        # SPARK_GRAFT_STEP_PROFILE=1: record per-phase walls inside each
-        # superstep (plan build / lineage-cut call / action / messages)
-        # to attribute the fixed per-step floor — the lazy
-        # localCheckpoint converts the plan to an RDD at CALL time, so
-        # its cost shows up in "checkpoint", not "action".
-        profile = bool(os.environ.get("SPARK_GRAFT_STEP_PROFILE"))
-        steps_since_cut = 0
-
         # Data-derived static step planning (see _static_step_partitions):
         # when the per-step data is too small to amortize AQE's
         # per-stage job scheduling, run the whole loop statically at a
         # derived partition count; otherwise this is None and nothing
-        # changes. Scoped to this run and restored in `finally` (the
+        # changes. Scoped to this run and restored on exit (the
         # cooperative-cancel RunAborted path included).
-        static_p = (
-            self._static_step_partitions(g, spark)
-            if self.state_mode == "lazy"
-            else None
-        )
-        # conf handling (save/set/restore + the concurrent-jobs lock)
-        # lives in static_plan_scope; entered manually so the loop body
-        # keeps its existing try/finally structure
-        _scope = static_plan_scope(spark, static_p)
-        _scope.__enter__()
-        try:
+        with static_plan_scope(spark, self._static_step_partitions(g, spark)):
             while not finished:
                 if should_stop is not None and should_stop():
                     raise RunAborted(
@@ -332,128 +267,46 @@ class PregelRunner:
                 else:
                     s += 1
                     out = program.superstep(s, g, state, messages, aggs)
-                t_plan = time.monotonic()
 
-                # Materialization strategy (keeps Spark jobs/superstep at 1-2
-                # and cached bytes at ~1 state copy):
-                # - state: the plan must be truncated every superstep —
-                #   without truncation each superstep's plan embeds the
-                #   previous state AND message plans (which embed the state
-                #   again), doubling plan size per superstep. This is the
-                #   reference's per-superstep status/value double-buffer
-                #   (FileGraphPartition.java:640-661). Two modes, MEASURED
-                #   head-to-head (PageRank sf0.1 x16, local[8]):
-                #   * "lazy" (default): single-job lazy localCheckpoint; the
-                #     step's statically-planned computation rides the
-                #     aggregate action. Steady 2.9 s/superstep.
-                #   * "aqe": persist -> aggregate action (step computation
-                #     runs UNDER adaptive execution into the cache) -> eager
-                #     localCheckpoint of the cache scan -> unpersist.
-                #     Hypothesis was static-planning waste; measurement says
-                #     otherwise — 6.4 s/superstep and degrading (the extra
-                #     cache+checkpoint double-store churns the block manager
-                #     and GC). AQE buys nothing here because the per-step
-                #     plans are two fixed key-partitioned shuffles with no
-                #     join-strategy or partition-count decisions worth
-                #     re-planning. Kept selectable (SPARK_GRAFT_STATE_MODE)
-                #     for re-measurement on other workload shapes.
-                # - messages: checkpointed ONLY when the halt rule needs their
-                #   count. Otherwise they stay lazy: consumed exactly once by
-                #   the next superstep's job (their plan roots at the
-                #   checkpointed state, so no lineage growth), and never cached
-                #   — halving per-superstep block-manager churn and GC.
+                # The state plan is cut every superstep — without it each
+                # superstep's plan embeds the previous state AND message
+                # plans (which embed the state again), doubling plan size
+                # per superstep. This is the reference's per-superstep
+                # status/value double buffer (FileGraphPartition.java:
+                # 640-661). The step's computation rides the aggregate
+                # action: one Spark job per superstep under the static
+                # planner. Cutting through a cache, or only every K > 1
+                # supersteps, measured slower (README "Measured negatives").
                 exprs = [v.alias(k) for k, v in out.agg_exprs.items()]
-                exprs.append(F.count(F.lit(1)).alias("_state_rows"))
-                if self.state_mode == "aqe":
-                    cached = out.state.persist()
-                    _t = time.monotonic()
-                    row = cached.agg(*exprs).collect()[0]
-                    dur_action = time.monotonic() - _t
-                    _t = time.monotonic()
-                    new_state = cached.localCheckpoint(eager=True)
-                    dur_ckpt = time.monotonic() - _t
-                    cached.unpersist()
-                elif self.state_mode == "cache":
-                    # persist-only: the action executes the step INTO the
-                    # cache; no plan->RDD conversion ever happens. Later
-                    # supersteps plan against the cached analyzed plan
-                    # (CacheManager substitutes InMemoryRelation), so the
-                    # physical plan per step stays two shuffles + a cache
-                    # scan. prev-state unpersist below frees each cache one
-                    # step after it stops being an input.
-                    new_state = out.state.persist()
-                    dur_ckpt = 0.0
-                    _t = time.monotonic()
-                    row = new_state.agg(*exprs).collect()[0]
-                    dur_action = time.monotonic() - _t
-                else:
-                    steps_since_cut += 1
-                    if steps_since_cut >= self.truncate_every:
-                        _t = time.monotonic()
-                        # NOTE (round-6 A/B): converting this under
-                        # static_conversion (AQE off) at the session's
-                        # p=32 was measured WORSE (1.59 s vs 0.88 s/step,
-                        # sf0.1, local[32]) — 4 stages x 32 tiny-task
-                        # launches outweigh the saved Exchange. The
-                        # data-derived planner above resolves this: when
-                        # static_p is set, this same call converts
-                        # statically at the derived partition count
-                        # (0.55 s/step measured at p=4); otherwise it
-                        # converts under AQE exactly as before.
-                        new_state = out.state.localCheckpoint(eager=False)
-                        dur_ckpt = time.monotonic() - _t
-                        steps_since_cut = 0
-                    else:
-                        # in-window superstep: no lineage cut — the action
-                        # below plans and re-executes the (bounded) uncut
-                        # window; see truncate_every in __init__
-                        new_state = out.state
-                        dur_ckpt = 0.0
-                    _t = time.monotonic()
-                    row = new_state.agg(*exprs).collect()[0]
-                    dur_action = time.monotonic() - _t
-                t_mat = time.monotonic()
-                new_msgs = None
-                if out.make_messages is not None:
-                    new_msgs = out.make_messages(new_state)
-                    if program.needs_message_count:
-                        new_msgs = new_msgs.localCheckpoint(eager=False)
-
-                # one agg pass = the reference's per-worker partial aggregate
-                # + master merge (MasterAggrManager/WorkerAggrManager)
+                state, row = cut(
+                    out.state, *exprs, F.count(F.lit(1)).alias("_state_rows")
+                )
+                # one agg pass = the reference's per-worker partial
+                # aggregate + master merge (MasterAggrManager/WorkerAggrManager)
                 aggs = row.asDict()
-                if new_msgs is None:
+                # messages are cut ONLY when the halt rule needs their
+                # count. Otherwise they stay lazy: consumed exactly once
+                # by the next superstep's job (their plan roots at the
+                # cut state, so no lineage growth).
+                messages = None
+                if out.make_messages is None:
                     aggs[MSG_COUNT] = 0
-                elif program.needs_message_count:
-                    aggs[MSG_COUNT] = new_msgs.count()
                 else:
-                    aggs[MSG_COUNT] = None  # unknown, assumed non-empty
+                    messages = out.make_messages(state)
+                    if program.needs_message_count:
+                        messages, n = cut(messages)
+                        aggs[MSG_COUNT] = n[0]
+                    else:
+                        aggs[MSG_COUNT] = None  # unknown, assumed non-empty
                 aggs[SUPERSTEP] = s
 
-                if prev_state is not None:
-                    prev_state.unpersist()
-                if prev_msgs is not None and program.needs_message_count:
-                    prev_msgs.unpersist()
-                prev_state, prev_msgs = state, messages
-                state, messages = new_state, new_msgs
-
-                t_end = time.monotonic()
                 step_metrics = {
                     "superstep": s,
-                    "seconds": t_end - t0,
+                    "seconds": time.monotonic() - t0,
                     "messages": aggs[MSG_COUNT],
                     "state_rows": int(aggs["_state_rows"]),
-                    "aggregates": {
-                        k: aggs[k] for k in out.agg_exprs
-                    },
+                    "aggregates": {k: aggs[k] for k in out.agg_exprs},
                 }
-                if profile:
-                    step_metrics["phase_seconds"] = {
-                        "plan": round(t_plan - t0, 4),
-                        "checkpoint": round(dur_ckpt, 4),
-                        "action": round(dur_action, 4),
-                        "messages": round(t_end - t_mat, 4),
-                    }
                 history.append(step_metrics)
                 if on_superstep is not None:
                     on_superstep(step_metrics)
@@ -464,8 +317,6 @@ class PregelRunner:
                 ):
                     self._write_checkpoint(program, s, state, messages, aggs)
 
-        finally:
-            _scope.__exit__(None, None, None)
         total = time.monotonic() - t_run0
         metrics = {
             "algorithm": program.name,

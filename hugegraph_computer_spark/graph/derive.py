@@ -37,6 +37,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hugegraph_computer_spark.engine.pin import cut
+
 TURNS_PER_CONV = 16  # caps conversation length -> bounds graph diameter
 
 ROLE_BY_EVENT = {
@@ -228,7 +230,7 @@ class Graph:
         if partitions:
             nodes = nodes.repartition(partitions, "id")
             edges = edges.repartition(partitions, "src")
-        nv = None
+        nv = ne = None
         if cache:
             # lineage cut + materialize in ONE pass (round 6): a bare
             # persist re-contributes the entire derivation subtree to
@@ -239,12 +241,8 @@ class Graph:
             # blocks directly — measured 2x cheaper at sf0.1 than the
             # persist->count->checkpoint->unpersist pin, which stores
             # the data twice. The count doubles as num_vertices.
-            nodes = nodes.localCheckpoint(eager=False)
-            nv = nodes.count()
-            edges = edges.localCheckpoint(eager=False)
-            ne = edges.count()
-        else:
-            ne = None
+            nodes, (nv,) = cut(nodes)
+            edges, (ne,) = cut(edges)
         return cls(
             vertices=nodes, edges=edges, partitions=partitions, _nv=nv, _ne=ne
         )
